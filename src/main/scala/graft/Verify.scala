@@ -16,22 +16,13 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_CONF overrides (probe gate only — the driver never
     // sets it): applied to the session here, and read by the oracle
-    // builders below via the same ConfEnv, so engine and oracle move
-    // together (tools/probe_all.sh's hotbucket profile).
-    graft.engine.ConfEnv(spark)
-    // the TOK/MINHASH/minhash_recall oracle SQL hardcodes the default
-    // 8-hex-digit md5 fold; a session running a different width would
-    // silently desynchronize token ids / sample predicates from the
-    // oracle. Fail BEFORE the dump loop — failing after it wasted the
-    // whole multi-minute dump and left stale wrong-fold parquet in
-    // outDir for the driver to compare.
-    val fw = spark.conf.get("graft.text.foldHexDigits", "8")
-    require(fw == "8",
-      s"oracled runs require graft.text.foldHexDigits=8 (got $fw): the oracle SQL hardcodes the 8-digit fold")
-    // same discipline for every ConfEnv-mirrored knob: a session-conf
-    // value that disagrees with the env face would desynchronize the
-    // oracle literals from the engine — fail before the dump loop
-    graft.engine.ConfEnv.requireSynced(spark)
+    // builders below via GraftConf.oracle, so engine and oracle move
+    // together (tools/probe_all.sh's hotbucket profile). The sync
+    // check runs BEFORE the dump loop — failing after it wasted the
+    // whole multi-minute dump and left stale parquet in outDir for
+    // the driver to compare.
+    graft.engine.GraftConf.setFromEnv(spark)
+    graft.engine.GraftConf.requireOracleSynced(spark)
     new java.io.File(outDir).mkdirs()
     // iteration aid: SPARK_GRAFT_VERIFY_ONLY=q1,q2 dumps just those
     // queries (the driver never sets it — full surface by default)

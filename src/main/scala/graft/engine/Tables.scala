@@ -100,14 +100,14 @@ object Tables {
     * amortized across every query — vs the alternative of a
     * uniqueness window shuffled under EVERY id-keyed scan.
     *
-    * Escape hatch: `graft.pk.check=skip` skips the scan for callers
+    * Escape hatch: [[GraftConf.pkCheck]] `skip` skips the scan for callers
     * who have ensured uniqueness out-of-band (or who explicitly accept
     * engine-defined behavior under duplicates — documented, loud,
     * opt-in). */
   private val pkProbe = new SessionCache[Unit]
   private[graft] def requirePk(s: SparkSession, d: String,
                                tableName: String, key: String): Unit =
-    if (s.conf.get("graft.pk.check", "error") != "skip")
+    if (GraftConf(s).pkCheck)
       pkProbe.getStable(s,
           s"$d|$tableName|$key|${SessionCache.dataFingerprint(s"$d/$tableName.parquet")}") {
         val bad = table(s, d, tableName)
@@ -122,7 +122,7 @@ object Tables {
                else s"$key=$id occurs $n times") +
               ". Id-keyed semantics (keeper windows, id-equi-joins, per-id " +
               "aggregation) are undefined under duplicate or NULL ids — " +
-              "dedupe the corpus upstream, or set graft.pk.check=skip to " +
+              s"dedupe the corpus upstream, or set ${GraftConf.PkCheck}=skip to " +
               "accept engine-defined behavior.")
         }
       }
@@ -164,15 +164,6 @@ object Tables {
     * engines see the identical universe. The driver fixtures contain
     * no such rows — this boundary is live only on adversarial corpora
     * (tools/AdversarialFixture). */
-  /** The declared embedding dimensionality (conf `graft.vector.dim`,
-    * default 64 — the driver tables' width). Part of the vector
-    * UNIVERSE definition below: a row whose array length differs
-    * exits the universe on BOTH engines, exactly like a NULL row. A
-    * deployment with a different width sets the conf (oracled runs
-    * via SPARK_GRAFT_CONF so the oracle gate moves with it). */
-  def vectorDim(s: SparkSession): Int =
-    s.conf.get("graft.vector.dim", "64").toInt
-
   def cleanVectors(df: DataFrame, embCol: String = "embedding",
                    labelCol: String = "label"): DataFrame = {
     // native kernel, not forall(x -> x IS NOT NULL): HOF lambdas are
@@ -192,7 +183,10 @@ object Tables {
     // Infinity dies inside DECIMAL rounds as NumberFormatException —
     // probed as 10 crashes/parity failures before the gate. Same
     // kernel discipline as the null mask.
-    val dim = vectorDim(df.sparkSession)
+    // The declared width is [[GraftConf.vectorDim]] (default 64, the
+    // driver tables' width): a row whose array length differs exits
+    // the universe on BOTH engines, exactly like a NULL row.
+    val dim = GraftConf(df.sparkSession).vectorDim
     val gated = df.filter(col(embCol).isNotNull
       && !expr(s"vec_has_null_elem($embCol)")
       && !expr(s"vec_has_nonfinite_elem($embCol)")
@@ -209,7 +203,7 @@ object Tables {
     // memoized limit-1 probe (first survivor short-circuits); the
     // attribution scan runs only on an already-empty universe.
     dimGateProbe.getStable(df.sparkSession,
-        s"${df.queryExecution.analyzed.semanticHash()}|$embCol|$labelCol|$dim") {
+        s"${df.queryExecution.analyzed.semanticHash()}|$embCol|$labelCol") {
       if (gated.isEmpty) {
         val surv = df.filter(col(embCol).isNotNull
           && !expr(s"vec_has_null_elem($embCol)")
@@ -219,9 +213,9 @@ object Tables {
           min(size(col(embCol))), max(size(col(embCol)))).collect()(0)
         if (r.getLong(0) > 0) throw new IllegalArgumentException(
           s"vector universe emptied by the DIMENSION gate alone: " +
-            s"graft.vector.dim=$dim, but all ${r.getLong(0)} rows passing the " +
+            s"${GraftConf.VectorDim}=$dim, but all ${r.getLong(0)} rows passing the " +
             s"null/finiteness/label clauses have width in [${r.get(1)}, ${r.get(2)}]. " +
-            "Set graft.vector.dim to the corpus width (via SPARK_GRAFT_CONF for " +
+            s"Set ${GraftConf.VectorDim} to the corpus width (via SPARK_GRAFT_CONF for " +
             "oracled runs, so the oracle's len() gate moves with it).")
       }
     }
@@ -241,7 +235,7 @@ object Tables {
     // name as a circular reference — the schema-qualified form reaches
     // the base table (the driver registers tables as main-schema views).
     // len(embedding) mirrors cleanVectors' dimension gate; the literal
-    // interpolates from ConfEnv like the pair-window cap, so the probe
+    // is GraftConf's oracle face like the pair-window cap, so the probe
     // gate can move both engines together (driver default: 64).
     // NOT isfinite(x) is TRUE for NaN and ±Infinity, NULL for a NULL
     // element (filter keeps only TRUE — NULL elements stay the null
@@ -249,7 +243,7 @@ object Tables {
     spliceCte(sql, "embeddings AS (SELECT * FROM main.embeddings WHERE embedding IS NOT NULL" +
       " AND len(list_filter(embedding, x -> x IS NULL)) = 0" +
       " AND len(list_filter(embedding, x -> NOT isfinite(x))) = 0" +
-      s" AND len(embedding) = ${ConfEnv.get("graft.vector.dim", "64")}" +
+      s" AND len(embedding) = ${GraftConf.oracle.vectorDim}" +
       " AND label IS NOT NULL)")
 
   /** Splice `cte` in as the FIRST CTE of `sql` (one shared

@@ -26,6 +26,10 @@ import graft.engine.Tables
 object RelQueries {
   import Tables._
 
+  /** `q_timeseries_fill`'s per-user span cap in hours (≈ 228 years),
+    * shared by the engine filter and the oracle's span CTE. */
+  private val MaxGridHours = 2000000L
+
   /** Written-once per-lang dim for `q_join_skew_aqe` (the
     * Sinks.cachedPath pattern: one write per (session, sfDir); the
     * scratch dir is deleted by a JVM shutdown hook —
@@ -336,20 +340,18 @@ object RelQueries {
     "q_timeseries_fill" -> ((s, d) => {
       val ev = events(s, d).withColumn("h", date_trunc("hour", col("ts")))
       val hourly = ev.groupBy("user_id", "h").agg(round(sum("value"), 4).as("hv"))
-      // SPAN CAP (round 14, conf graft.timeseries.maxGridHours,
-      // default 2M h ≈ 228 years): the grid is min..max PER USER, so a
-      // single sentinel date (a year-9999 "never expires", a year-1
-      // epoch bug) makes one user's sequence() array ~70M entries — a
+      // SPAN CAP (round 14, [[MaxGridHours]]): the grid is min..max
+      // PER USER, so a single sentinel date (a year-9999 "never
+      // expires", a year-1 epoch bug) makes one user's sequence()
+      // array ~70M entries — a
       // probed 10-minute hang in BOTH engines, from ONE corrupt row.
       // A user whose span exceeds the cap is excluded from the fill by
       // declaration (their span is meaningless, not resampleable);
-      // the oracle's span CTE mirrors the same bound via ConfEnv. The
-      // default keeps every driver/probe fixture span (max ~657k h)
-      // untouched.
-      val capH = s.conf.get("graft.timeseries.maxGridHours", "2000000").toLong
+      // the oracle's span CTE applies the same bound. The cap keeps
+      // every driver/probe fixture span (max ~657k h) untouched.
       val span = ev.groupBy("user_id").agg(min("h").as("h0"), max("h").as("h1"))
         .filter(unix_timestamp(col("h1")) - unix_timestamp(col("h0"))
-          <= lit(capH * 3600L))
+          <= lit(MaxGridHours * 3600L))
       val grid = span.select(col("user_id"),
         explode(expr("sequence(h0, h1, interval 1 hour)")).as("h"))
       val w = Window.partitionBy("user_id").orderBy("h")
@@ -1322,7 +1324,7 @@ object RelQueries {
         |hourly AS (SELECT user_id, h, ROUND(SUM(value), 4) AS hv FROM e GROUP BY 1, 2),
         |span AS (SELECT user_id, MIN(h) AS h0, MAX(h) AS h1 FROM e GROUP BY 1
         |  HAVING extract(epoch FROM MAX(h)) - extract(epoch FROM MIN(h))
-        |    <= CAST(${graft.engine.ConfEnv.get("graft.timeseries.maxGridHours", "2000000")} AS BIGINT) * 3600),
+        |    <= CAST($MaxGridHours AS BIGINT) * 3600),
         |grid AS (SELECT user_id, UNNEST(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
         |  FROM span),
         |j AS (SELECT g.user_id, g.h, hv FROM grid g LEFT JOIN hourly USING (user_id, h))

@@ -3,7 +3,7 @@ package graft.engine.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.{ArrayMath, Tables}
+import graft.engine.{ArrayMath, GraftConf, Tables}
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.2
   * #19, #20, #24 + embedding-cosine near-dedup and the LSH-bucketed
@@ -103,7 +103,7 @@ object Similarity {
     * window form ~6×; cosine_topk/embedding_cosine_dedup run as
     * distributed cross joins, and the 100 TB similarity paths are the
     * ANN operators). Callers MUST size-gate: knn_per_vector only
-    * reaches this below `graft.sim.knnKernelMaxRows` (above it the
+    * reaches this below [[GraftConf.knnKernelMaxRows]] (above it the
     * query plans the distributed window form instead), so the collect
     * is bounded by an explicit contract, not a fixture accident. */
   private def collectVecs(s: SparkSession, d: String): Array[(Long, Array[Double], Double)] = {
@@ -194,7 +194,7 @@ object Similarity {
     // #20 5 nearest neighbors per vector (Euclidean) — SIZE-GATED
     // like near_dedup_groups gates its union-find: the broadcast
     // kernel below runs only while the vector table fits a sane
-    // broadcast (`graft.sim.knnKernelMaxRows`, default 100 000 rows ≈
+    // broadcast ([[GraftConf.knnKernelMaxRows]], default 100 000 rows ≈
     // 50 MB at 64-d — one copy per executor, NOT per task); above the
     // gate the query silently switches to the fully distributed
     // cross-join + per-vector window form (identical declared
@@ -218,7 +218,7 @@ object Similarity {
     // but the semantics no longer rely on that).
     "knn_per_vector" -> ((s, d) => {
       import s.implicits._
-      val gate = s.conf.get("graft.sim.knnKernelMaxRows", "100000").toLong
+      val gate = GraftConf(s).knnKernelMaxRows
       val nRows = vecs(s, d).count() // column-pruned count: row-group stats only
       if (nRows > gate) {
         // distributed exact form: block-cartesian pairs + per-vector
@@ -724,33 +724,22 @@ object Similarity {
     * re-checkpoint the corpus-wide pass per invocation). */
   private val subCache = new graft.engine.SessionCache[DataFrame]
 
-  /** POST-SHUFFLE re-fan gate (`graft.fan.postShuffle`, default on —
-    * VERDICT r15 what's-wrong #2): the pre-checkpoint repartitions
-    * below re-spread an AQE-coalesced intermediate to session
-    * parallelism. Local mode NEEDS that (AQE coalesces the small
-    * fixture surface to ~2 partitions and every consumer pass runs
-    * 2-wide); a 100 TB cluster must NOT pay a full re-shuffle of the
-    * surface for width AQE already sized to the advisory partition
-    * bytes — set `graft.fan.postShuffle=off` there. A width-probe
-    * guard (the docsF pattern) can't work here: the AQE-final count
-    * needs `.rdd` mid-build, which forces materialization. Results
-    * are identical either way (round-robin placement only). */
-  private def postShuffleFan(s: SparkSession): Boolean =
-    s.conf.get("graft.fan.postShuffle", "on") != "off"
-
+  // The pre-checkpoint repartitions below re-spread an AQE-coalesced
+  // intermediate to session parallelism: AQE coalesces the small
+  // fixture surface to ~2 partitions, and every consumer pass would
+  // run 2-wide. A width-probe guard (the docsF pattern) can't work
+  // here: the AQE-final count needs `.rdd` mid-build, which forces
+  // materialization. Results are identical at any width (round-robin
+  // placement only).
   private[graft] def cellRankedCached(s: SparkSession, d: String): DataFrame =
     subCache.get(s, s"$d|crk") {
-      val base = cellRanked(s, d)
-      (if (postShuffleFan(s))
-        base.repartition(s.sparkContext.defaultParallelism) else base)
+      cellRanked(s, d).repartition(s.sparkContext.defaultParallelism)
         .localCheckpoint(true)
     }
 
   private[graft] def lshSignaturesCached(s: SparkSession, d: String): DataFrame =
     subCache.get(s, s"$d|lshsig") {
-      val base = lshSignatures(s, d)
-      (if (postShuffleFan(s))
-        base.repartition(s.sparkContext.defaultParallelism) else base)
+      lshSignatures(s, d).repartition(s.sparkContext.defaultParallelism)
         .localCheckpoint(true)
     }
 

@@ -317,8 +317,7 @@ class GbinBatchWrite(path: String, writeSchema: StructType, doTruncate: Boolean)
       // overwrite reclaims it; until then it is invisible to readers
       // and costs only disk. Default 24 h — longer than any sane task
       // attempt; crash-sim tests force 0 to sweep immediately.
-      val ttl = spark.conf
-        .get("graft.gbin.staleStagingTtlMs", (24L * 3600 * 1000).toString).toLong
+      val ttl = graft.engine.GraftConf(spark).staleStagingTtlMs
       val now = System.currentTimeMillis()
       f.listStatus(p).filter { st =>
         val n = st.getPath.getName
@@ -361,7 +360,7 @@ class GbinBatchWrite(path: String, writeSchema: StructType, doTruncate: Boolean)
     * CONCURRENCY: part FILES are safe under concurrent appends
     * (job-unique names, tag-scoped sweeps here in commit(); the
     * truncate factory's stale-orphan sweep is AGE-GATED by
-    * `graft.gbin.staleStagingTtlMs` so it cannot delete a live
+    * [[graft.engine.GraftConf.staleStagingTtlMs]] so it cannot delete a live
     * concurrent append's staging), but the manifest publish
     * is a read-modify-write — two appends racing their commits can
     * lose the slower job's entries (its parts stay on disk, invisible

@@ -45,26 +45,18 @@ object StreamQueries {
     * the conf is read once at query START, so scoping it around
     * start+awaitTermination is sufficient and the session value is
     * restored for everything downstream. At real scale the state
-    * partition count follows the cluster's shuffle sizing. */
-  /** State-store instance count per stateful operator, conf-driven
-    * (`graft.stream.statePartitions`, default 4 — the measured local
-    * micro-batch sweet spot; see [[withStatePartitions]]). At cluster
-    * scale set it to the deployment's shuffle sizing — a CONSTANT here
-    * would be local tuning masquerading as a default. Results are
-    * independent of the value (state partitioning is orthogonal to
-    * the declared output; StreamSpec pins the semantics). */
-  private def statePartitions(s: SparkSession): Int = {
-    val n = s.conf.get("graft.stream.statePartitions", "4").toInt
-    require(n >= 1, s"graft.stream.statePartitions=$n must be >= 1")
-    n
-  }
-
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
+    * partition count follows the cluster's shuffle sizing; results
+    * are independent of the count (StreamSpec pins the semantics). */
+  private def withStatePartitions[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
+    s.conf.set(key, StatePartitions.toString)
     try body finally s.conf.set(key, prev)
   }
+
+  /** State-store instances per stateful operator: the measured local
+    * micro-batch sweet spot (see [[withStatePartitions]]). */
+  private val StatePartitions = 4
 
   /** Unique memory-sink table name per invocation (two concurrent
     * streams cannot share a query name). Cleanup is NOT deferred to
@@ -161,7 +153,7 @@ object StreamQueries {
     Tables.requireUtcForEventTs(s) // eventTsExpr on a readStream below
     val schema = s.read.parquet(s"$d/events.parquet").schema
     val name = freshSinkName("wm_dedup")
-    withStatePartitions(s, statePartitions(s)) {
+    withStatePartitions(s) {
       val q = s.readStream.schema(schema).option("pathGlobFilter", "events.parquet")
         .parquet(d)
         .withColumn("ts", Tables.eventTsExpr(schema))
@@ -200,7 +192,7 @@ object StreamQueries {
       // null-free here).
       .filter(col("user_id").isNotNull && col("value").isNotNull)
       .selectExpr("user_id", "value").as[(Long, Double)]
-    withStatePartitions(s, statePartitions(s)) {
+    withStatePartitions(s) {
       val q = events.groupByKey(_._1)
         .flatMapGroupsWithState[(Long, Double), (Long, Long, Double)](
           OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
@@ -244,7 +236,7 @@ object StreamQueries {
       .select(col("user_id").as("cu"), col("tss").as("cts"))
       .withWatermark("cts", "10 minutes")
     val name = freshSinkName("ssj")
-    withStatePartitions(s, statePartitions(s)) {
+    withStatePartitions(s) {
       val q = err.join(clk,
           col("eu") === col("cu")
             && col("cts") >= col("ets") - expr("INTERVAL 10 MINUTES")
@@ -301,7 +293,7 @@ object StreamQueries {
     import s.implicits._
     val schema = s.read.parquet(s"$d/events.parquet").schema
     val name = freshSinkName("tws")
-    withStatePartitions(s, statePartitions(s)) {
+    withStatePartitions(s) {
       val q = s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(d)
         // same null boundary as statefulPerUser (typed encoder)
@@ -332,7 +324,7 @@ object StreamQueries {
   private def streamContentDedup(s: SparkSession, d: String): DataFrame = {
     val schema = s.read.parquet(s"$d/documents.parquet").schema
     val name = freshSinkName("scd")
-    withStatePartitions(s, statePartitions(s)) {
+    withStatePartitions(s) {
       val q = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
         // null-text docs leave the dedup universe (same boundary
@@ -384,7 +376,7 @@ object StreamQueries {
 
   private def foreachBatchRun(s: SparkSession, d: String, out: String): Unit = {
     val schema = s.read.parquet(s"$d/events.parquet").schema
-    withStatePartitions(s, statePartitions(s)) {
+    withStatePartitions(s) {
       val q = s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(d)
         .withColumn("ts", Tables.eventTsExpr(schema))
@@ -431,7 +423,7 @@ object StreamQueries {
     import java.sql.Timestamp
     def t(m: Int) = new Timestamp(1704067200000L + m * 60000L)
     val rows = (0 until 8).map(i => (i.toLong, t(i), i.toDouble))
-    withStatePartitions(s, statePartitions(s)) {
+    withStatePartitions(s) {
       // 1) watermarked window agg + within-watermark dedup (HDFS store)
       val m1 = MemoryStream[(Long, Timestamp, Double)](s)
       val q1 = m1.toDF().toDF("id", "ts", "v")

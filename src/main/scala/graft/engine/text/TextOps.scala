@@ -3,7 +3,7 @@ package graft.engine.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
+import graft.engine.{GraftConf, Tables}
 
 /** Text / dedup operators over the `documents` table — the LLM-data-
   * pipeline surface (SURVEY.md §2.2 #17,18,21,22,23 + the extended
@@ -98,7 +98,7 @@ object TextOps {
     * vocabularies the birthday bound gives E[collisions] =
     * C(30k,2)/2³² ≈ 0.1 — a collision merges two tokens in the hash
     * semantics identically in BOTH engines (oracles stay green). At
-    * 100 TB vocabularies set `graft.text.foldHexDigits=12` (48-bit
+    * 100 TB vocabularies set [[GraftConf.foldHexDigits]] to 12 (48-bit
     * ids, birthday-safe into the billions of distinct tokens): every
     * modular consumer reduces the id mod P immediately (congruence ⇒
     * identical results at width 8, Long-safe products at width 12+),
@@ -120,13 +120,6 @@ object TextOps {
     * corpus-sized engine path calls the native `fold_hex` instead
     * (FoldWidthSpec pins the two bit-for-bit). */
 
-  /** Fold width in hex digits (4 bits each), session-configurable. */
-  private def foldWidth(s: SparkSession): Int = {
-    val w = s.conf.get("graft.text.foldHexDigits", "8").toInt
-    require(w >= 1 && w <= 15, s"graft.text.foldHexDigits=$w outside [1,15]")
-    w
-  }
-
   /** Adds a fold-hash column derived from md5(`srcCol`) — via the
     * NATIVE codegen'd `fold_hex` expression (graft.engine.expr
     * .FoldHex): the HOF form ran interpreted lambdas per hex digit
@@ -138,7 +131,7 @@ object TextOps {
     graft.engine.expr.GraftFunctions.register(df.sparkSession)
     df.withColumn(out,
       call_function("fold_hex", md5(col(srcCol).cast("binary")),
-        lit(foldWidth(df.sparkSession))))
+        lit(GraftConf(df.sparkSession).foldHexDigits)))
   }
 
   /** The DISTINCT word-n-gram set of each document, one row per
@@ -163,23 +156,9 @@ object TextOps {
     // AQE coalesces the distinct's ~small output under the advisory
     // partition size, narrowing every consumer pass (measured 6
     // partitions at sf0.1); pin the checkpoint at session width.
-    // POST-SHUFFLE re-fan, conf-gated (`graft.fan.postShuffle`, see
-    // [[postShuffleFan]]): at 100 TB the AQE-coalesced width IS the
-    // right one and the re-spread would be a full extra shuffle of
-    // the n-gram surface — clusters set `off`.
-    (if (postShuffleFan(docsDf.sparkSession))
-      set.repartition(docsDf.sparkSession.sparkContext.defaultParallelism)
-    else set)
+    set.repartition(docsDf.sparkSession.sparkContext.defaultParallelism)
       .localCheckpoint(true)
   }
-
-  /** POST-SHUFFLE re-fan gate (`graft.fan.postShuffle`, default on —
-    * VERDICT r15 what's-wrong #2, same contract as Similarity's):
-    * local mode re-spreads AQE-coalesced intermediates to session
-    * width; production turns the re-shuffles off. Results identical
-    * either way (round-robin placement only). */
-  private def postShuffleFan(s: SparkSession): Boolean =
-    s.conf.get("graft.fan.postShuffle", "on") != "off"
 
   /** ngramSet memoized per (session, sfDir, n, keep): the 8-gram set
     * has TWO declared consumers (`decontaminate_ngram`,
@@ -222,17 +201,15 @@ object TextOps {
     // checkpoint: the pair surface (`minhash_near_dedup`) and group
     // resolution (`resolveGroups`) both consume it, and re-deriving
     // the MinHash pipeline per consumer was ~5 s of round-2 bench per
-    // extra consumer. Key includes the fold width: the pair list
-    // depends on it, and a session may legitimately flip the width
-    // between calls.
+    // extra consumer.
     require(8 % rowsPerBand == 0, s"rowsPerBand=$rowsPerBand must divide 8")
-    val cap = bucketCap(s)
-    require(cap >= 1, s"graft.neardedup.bucketCap=$cap must be >= 1")
+    val conf = GraftConf(s)
+    val cap = conf.bucketCap
     // effective segment size of the oversize-bucket sharding, clamped
     // to ≥ cap so the overlap replication below is one-segment-deep
-    val shard = math.max(shardSize(s), cap)
+    val shard = math.max(conf.shardSize, cap)
     val nBands = 8 / rowsPerBand
-    pairsCache.get(s, s"$d|${foldWidth(s)}|r$rowsPerBand|c$cap|s$shard") {
+    pairsCache.get(s, s"$d|r$rowsPerBand") {
         val sig = minhashSignatures(s, d)
         // band signatures: the r min-hashes of each band chained base-31
         def chain(idxs: Range) =
@@ -302,7 +279,7 @@ object TextOps {
         // equivalence, fixed and under scalacheck). A total-pair
         // cutoff would drop tail positions' consecutive edges and
         // SPLIT groups — rejected by design, not oversight. The
-        // default (4096, conf `graft.neardedup.bucketCap`) exceeds
+        // default [[GraftConf.bucketCap]] (4096) exceeds
         // every fixture bucket (max ~2.5k docs at sf0.1), so declared
         // fixture surfaces are unchanged while the DuckDB oracles
         // mirror the same window — the contract is live in both
@@ -376,7 +353,7 @@ object TextOps {
   private val sigCache = new graft.engine.SessionCache[DataFrame]
 
   /** The 8-minhash signature table `(doc_id, m0..m7)`, memoized per
-    * (session, sfDir, foldWidth). Banding-INDEPENDENT, so it gets its
+    * (session, sfDir). Banding-INDEPENDENT, so it gets its
     * own memo level: both declared banding operating points (b=2×r=4
     * and b=1×r=8) band the SAME signatures, and the signature
     * aggregation (a full doc-level shuffle of the token set) was
@@ -402,7 +379,7 @@ object TextOps {
     * exchange — no (doc, token) row ever exists in this path). */
   private[graft] def minhashSigArrayPlan(s: SparkSession, d: String): DataFrame = {
     graft.engine.expr.GraftFunctions.register(s)
-    val w = foldWidth(s)
+    val w = GraftConf(s).foldHexDigits
     // null-text docs emit NO row — the row universe of the former
     // explode-based form and of the oracle's UNNEST (both skip NULL);
     // the kernel alone would emit a null-signature row instead. A
@@ -414,7 +391,7 @@ object TextOps {
   }
 
   private[graft] def minhashSignatures(s: SparkSession, d: String): DataFrame =
-    sigCache.get(s, s"$d|${foldWidth(s)}") {
+    sigCache.get(s, d) {
       // checkpoint the ARRAY, then extract m0..m7 from the
       // materialized rows: the kernel provably runs once per doc
       // regardless of how project-collapsing treats an alias with 8
@@ -506,7 +483,7 @@ object TextOps {
     * map-side (trigram fabrication, md5-fold, distinct, sort all
     * inside one native kernel over the split array — a doc's trigrams
     * live in its own row, so no shuffle is ever needed to group
-    * them), memoized per (session, sfDir, foldWidth). Replaces the
+    * them), memoized per (session, sfDir). Replaces the
     * former explode→distinct→collect_list round trip that
     * `ngram_jaccard_dedup` re-paid per consumer subtree (the fold+
     * distinct above the checkpointed n-gram set was recomputed by
@@ -529,7 +506,7 @@ object TextOps {
     * subtree is invisible in any declared query's plan). */
   private[graft] def docTrigramIdArraysPlan(s: SparkSession, d: String): DataFrame = {
     graft.engine.expr.GraftFunctions.register(s)
-    val w = foldWidth(s)
+    val w = GraftConf(s).foldHexDigits
     // the <3-token guard is a CHEAP filter on the split array BEFORE
     // the kernel projection — a `size(arr) > 0` filter on top would
     // be predicate-pushed below the repartition with the whole
@@ -544,7 +521,7 @@ object TextOps {
   }
 
   private[graft] def docTrigramIdArrays(s: SparkSession, d: String): DataFrame =
-    triIdCache.get(s, s"$d|${foldWidth(s)}") {
+    triIdCache.get(s, d) {
       docTrigramIdArraysPlan(s, d).localCheckpoint(true)
     }
 
@@ -559,7 +536,7 @@ object TextOps {
     * shuffles both sides at 100 TB. */
   private def sampFlags(s: SparkSession, d: String): DataFrame = {
     graft.engine.expr.GraftFunctions.register(s)
-    val w = foldWidth(s)
+    val w = GraftConf(s).foldHexDigits
     docs(s, d).select(col("doc_id"),
       expr(s"fold_hex(md5(CAST(doc_id AS STRING)), $w) % 20 = 0")
         .as("samp"))
@@ -586,14 +563,14 @@ object TextOps {
     * independent cross-check. Package-private so ScaleShapeSpec can
     * assert the prefix filter is present on BOTH sides of the
     * token-keyed join (the spec fails on the round-4 shape). */
-  /** Truth pairs memoized per (session, sfDir, foldWidth): both
+  /** Truth pairs memoized per (session, sfDir): both
     * banding operating points (`minhash_recall`, `minhash_recall_b1r8`)
     * measure against the SAME exact-Jaccard ground truth — one build,
     * ~86k rows at sf0.1, eagerly checkpointed. */
   private val truthCache = new graft.engine.SessionCache[DataFrame]
 
   private[graft] def minhashTruthCached(s: SparkSession, d: String): DataFrame =
-    truthCache.get(s, s"$d|${foldWidth(s)}") {
+    truthCache.get(s, d) {
       minhashTruthPairs(s, d).localCheckpoint(true)
     }
 
@@ -691,50 +668,8 @@ object TextOps {
       .select("d1", "d2")
   }
 
-  /** Quotient-resolve threshold: largest quotient-graph edge count the
-    * driver union-find small-side move accepts. At ~16 bytes/edge the
-    * default 1M edges ≈ tens of MB of driver heap — well inside any
-    * realistic `spark.driver.memory`; override per session via
-    * `spark.conf.set("graft.neardedup.quotientMaxEdges", n)` (the
-    * ScaleShape spec forces 0 to exercise the distributed branch).
-    */
-  private def quotientMaxEdges(s: SparkSession): Long =
-    s.conf.get("graft.neardedup.quotientMaxEdges", "1000000").toLong
-
-  /** Per-position successor window of the hot-bucket cap in
-    * [[minhashPairs]]: each doc pairs with at most this many successors
-    * inside one (band, bsig) bucket's sorted doc order, bounding any
-    * bucket's pair fan-out to cap·|bucket| (linear) instead of
-    * |bucket|²/2. Groups are invariant under the cap (consecutive
-    * pairs always survive ⇒ buckets stay connected — MinhashCapSpec).
-    * The default exceeds every fixture bucket (max ~2.5k docs at
-    * sf0.1), so fixture pair surfaces are unchanged; override per
-    * session via `spark.conf.set("graft.neardedup.bucketCap", n)`. */
-  private[graft] def bucketCap(s: SparkSession): Int =
-    s.conf.get("graft.neardedup.bucketCap", "4096").toInt
-
-  /** Segment size of the oversize-bucket SHARDING in [[minhashPairs]]:
-    * a bucket whose sorted doc order exceeds this many ranks is split
-    * into rank-contiguous segments, each aggregated (and buffered) by
-    * its own task, so the per-task `collect_list` buffer is bounded by
-    * shardSize + cap entries instead of O(bucket) — the last
-    * spill-unsafe single-task memory of the dedup chain, closed. The
-    * pair surface is BIT-IDENTICAL to the unsharded successor window
-    * for any shard size (MinhashCapSpec pins it): a doc within `cap`
-    * ranks of its segment start is replicated into the previous
-    * segment as a SUCCESSOR CANDIDATE only (never an emitting
-    * position), so every home position sees exactly its global
-    * rank-window successors. The effective size is clamped to
-    * ≥ bucketCap — that keeps the overlap one-segment-deep (a doc is
-    * needed by at most the one segment before its home). The default
-    * (1M ranks ≈ tens of MB of struct buffer) never shards a fixture
-    * bucket; override per session via
-    * `spark.conf.set("graft.neardedup.shardSize", n)`. */
-  private[graft] def shardSize(s: SparkSession): Int =
-    s.conf.get("graft.neardedup.shardSize", (1 << 20).toString).toInt
-
   /** Resolved near-dup groups `(group_id = component min doc_id,
-    * member)`, memoized per (session, sfDir, threshold) within the JVM
+    * member)`, memoized per (session, sfDir) within the JVM
     * — the `sweepCached` pattern (KMeansSweep): `near_dedup_groups`
     * and `dedup_survivors` share ONE MinHash→contract→resolve run
     * instead of re-deriving the whole DAG per declared query (~10 s of
@@ -746,12 +681,10 @@ object TextOps {
     * never outlives the session that built it. */
   private val groupCache = new graft.engine.SessionCache[DataFrame]
 
-  private[graft] def resolvedGroups(s: SparkSession, d: String): DataFrame = {
-    val maxEdges = quotientMaxEdges(s)
-    groupCache.get(s, s"$d|$maxEdges|${foldWidth(s)}|c${bucketCap(s)}") {
-      resolveGroups(s, d, maxEdges).localCheckpoint(true)
+  private[graft] def resolvedGroups(s: SparkSession, d: String): DataFrame =
+    groupCache.get(s, d) {
+      resolveGroups(s, d, GraftConf(s).quotientMaxEdges).localCheckpoint(true)
     }
-  }
 
   /** near-dup pair → GROUP resolution: connected components over the
     * MinHash candidate-pair graph. Two phases, both shuffle-bounded:
@@ -996,7 +929,7 @@ object TextOps {
       // with no full window return null = the rows the full-window
       // filter used to empty out of the groupBy).
       graft.engine.expr.GraftFunctions.register(s)
-      val w = foldWidth(s)
+      val w = GraftConf(s).foldHexDigits
       docs(s, d)
         .select(col("doc_id"),
           expr(s"winnow_stats(split(text, ' '), 3, $w)").as("st"))
@@ -1566,7 +1499,7 @@ object TextOps {
     // predicate itself is unchanged (same IEEE double compare per row).
     "token_budget_sample" -> ((s, d) => {
       graft.engine.expr.GraftFunctions.register(s)
-      val w = foldWidth(s)
+      val w = GraftConf(s).foldHexDigits
       // the per-doc token-count table feeds the rate build AND the
       // final keep-join — checkpoint it so the text column is read
       // once per execution
@@ -1836,7 +1769,7 @@ object TextOps {
     // count is not, which is why the declared face stays uncapped).
     "incremental_dedup" -> ((s, d) => {
       graft.engine.expr.GraftFunctions.register(s)
-      val w = foldWidth(s)
+      val w = GraftConf(s).foldHexDigits
       // the 8-hash signature table IS the shared memoized one (same
       // mh formula, same per-doc agg) — rebuilding it here re-paid the
       // token-set shuffle per bench run (~1 s of the 2.5 s floor)
@@ -2370,17 +2303,15 @@ object TextOps {
 
   /** MinHash signature/band/pair CTEs (assumes $TOK precedes). The
     * `pairs` CTE mirrors the engine's hot-bucket cap ([[minhashPairs]],
-    * default `graft.neardedup.bucketCap` = 4096): a pair qualifies iff
+    * default [[GraftConf.bucketCap]] = 4096): a pair qualifies iff
     * its rank distance in the bucket's sorted doc order is ≤ cap —
     * inert at fixture bucket sizes (max ~2.5k docs), but the contract
-    * is stated identically in both engines. The cap literal is
-    * interpolated from [[graft.engine.ConfEnv]] (env SPARK_GRAFT_CONF)
-    * so the probe gate's hot-bucket profile can shrink engine cap and
-    * oracle window TOGETHER; with the env unset this is the committed
-    * 4096 byte-identically. (A cap set via spark.conf alone does NOT
-    * reach this string — oracled runs must use the env.) */
-  private[graft] val oracleBucketCap: String =
-    graft.engine.ConfEnv.get("graft.neardedup.bucketCap", "4096")
+    * is stated identically in both engines. The cap literal is read
+    * from [[GraftConf.oracle]] (env SPARK_GRAFT_CONF) so the probe
+    * gate's hot-bucket profile can shrink engine cap and oracle window
+    * TOGETHER; with the env unset this is the committed 4096
+    * byte-identically. (A cap set via spark.conf alone does NOT reach
+    * this string — oracled runs must use the env.) */
   private val MINHASH =
     s"""dt AS (SELECT DISTINCT doc_id, tid FROM tok JOIN vocab USING (token)),
       |h AS (SELECT doc_id, u.seed AS seed,
@@ -2398,7 +2329,7 @@ object TextOps {
       |  FROM bands),
       |pairs AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
       |  FROM rb a JOIN rb b ON a.band = b.band AND a.bsig = b.bsig
-      |    AND b.rn - a.rn BETWEEN 1 AND $oracleBucketCap)""".stripMargin
+      |    AND b.rn - a.rn BETWEEN 1 AND ${GraftConf.oracle.bucketCap})""".stripMargin
 
   val oracles: Map[String, String] = Map(
     "exact_dedup" ->
@@ -2795,7 +2726,7 @@ object TextOps {
          |  FROM bands1),
          |pairs1 AS (SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
          |  FROM rb1 a JOIN rb1 b ON a.bsig = b.bsig
-         |    AND b.rn - a.rn BETWEEN 1 AND $oracleBucketCap),
+         |    AND b.rn - a.rn BETWEEN 1 AND ${GraftConf.oracle.bucketCap}),
          |tokd AS (SELECT DISTINCT doc_id, token FROM tok),
          |samp AS (SELECT doc_id FROM (
          |  SELECT doc_id, CAST(SUM((strpos('0123456789abcdef',

@@ -120,8 +120,8 @@ object AdversarialFixture {
     * boilerplate string — the scraped-nav-menu shape that dominates a
     * MinHash band bucket at 100 TB. Identical token sets collapse to
     * one band signature, so the bucket size IS `hot` — run Verify
-    * under SPARK_GRAFT_CONF="graft.neardedup.bucketCap=8,
-    * graft.neardedup.shardSize=8" and the oversize-bucket shard
+    * with SPARK_GRAFT_CONF setting bucketCap = shardSize = 8
+    * ([[graft.engine.GraftConf]]) and the oversize-bucket shard
     * (TextOps minhashPairs, HOT-BUCKET SHARD note) engages on DATA:
     * ⌈hot/8⌉ rank segments with cap-deep overlap replicas, full
     * dedup-family oracle parity still required (tools/probe_all.sh
@@ -386,7 +386,7 @@ object AdversarialFixture {
         // year-1 epoch bug — one such row used to hand
         // q_timeseries_fill's per-user grid a ~70M-hour sequence()
         // (a probed 10-min hang in BOTH engines); the declared span
-        // cap (graft.timeseries.maxGridHours) excludes these users
+        // cap (RelQueries.MaxGridHours) excludes these users
         // from the fill identically on both faces
         case 43 => ts("9999-12-31 23:59:59")
         case 49 => ts("0001-01-01 00:00:00")
@@ -525,7 +525,7 @@ object AdversarialFixture {
     // ragged dimensionality (round 14): a truncated and a single-
     // element vector — the "encoder changed width mid-run" corruption.
     // Both exit the declared vector universe (cleanVectors' size gate
-    // = graft.vector.dim, mirrored len() in the oracle shadow CTE);
+    // = GraftConf.vectorDim, mirrored len() in the oracle shadow CTE);
     // before the gate they produced 7 crashes and 12 silent
     // cross-engine divergences on this very fixture.
     // duplicate PRIMARY KEYS (round 15, dupIds profile only): vec_id

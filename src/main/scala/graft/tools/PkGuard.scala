@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   *   1. `Tables.documents` raises the designed uniqueness error
   *      naming `doc_id`;
   *   2. `Tables.embeddings` raises it naming `vec_id`;
-  *   3. `graft.pk.check=skip` makes both loads succeed (the documented
+  *   3. [[graft.engine.GraftConf.pkCheck]] `skip` makes both loads succeed (the documented
   *      escape for callers who ensured uniqueness out-of-band or
   *      accept engine-defined behavior under duplicates).
   *
@@ -49,17 +49,17 @@ object PkGuard {
       }
     }
 
-    import graft.engine.Tables
+    import graft.engine.{GraftConf, Tables}
     expectError("documents", "doc_id")(Tables.documents(spark, dir).collect())
     expectError("embeddings", "vec_id")(Tables.embeddings(spark, dir).collect())
 
     // the escape hatch must actually open: skip + fresh session conf →
     // both loads succeed (engine-defined semantics accepted, loudly)
-    spark.conf.set("graft.pk.check", "skip")
+    spark.conf.set(GraftConf.PkCheck, "skip")
     try {
       val nd = Tables.documents(spark, dir).count()
       val nv = Tables.embeddings(spark, dir).count()
-      println(s"[pk-guard] skip: documents=$nd embeddings=$nv rows load under graft.pk.check=skip")
+      println(s"[pk-guard] skip: documents=$nd embeddings=$nv rows load under ${GraftConf.PkCheck}=skip")
     } catch {
       case e: Exception =>
         System.err.println(s"[pk-guard] skip path failed: ${e.getMessage}")

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.engine.GraftConf
 import graft.engine.text.TextOps
 
 /** Engagement auditor for the hot-bucket SHARD over a DATA-driven
@@ -14,7 +15,7 @@ import graft.engine.text.TextOps
   * pair count for that bucket against the exact windowed-emission
   * bound Σ_{rank} min(cap, n − rank).
   *
-  * Conf arrives via SPARK_GRAFT_CONF ([[graft.engine.ConfEnv]]) — the
+  * Conf arrives via SPARK_GRAFT_CONF ([[graft.engine.GraftConf]]) — the
   * SAME env the probe gate hands graft.Verify, so the audited run and
   * the parity run see identical knobs. Exit 1 if the shard did NOT
   * engage (max bucket ≤ shard) or the audit count diverges.
@@ -30,10 +31,11 @@ object ShardEngage {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.engine.ConfEnv(spark)
+    GraftConf.setFromEnv(spark)
 
-    val cap = TextOps.bucketCap(spark)
-    val shard = math.max(TextOps.shardSize(spark), cap) // minhashPairs' clamp
+    val conf = GraftConf(spark)
+    val cap = conf.bucketCap
+    val shard = math.max(conf.shardSize, cap) // minhashPairs' clamp
     val sig = TextOps.minhashSignatures(spark, dir)
     // band-0 signature, chained base-31 exactly as minhashPairs' chain()
     val bs0 = ((col("m0") * 31 + col("m1")) * 31 + col("m2")) * 31 + col("m3")

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import graft.engine.SessionCache
+import graft.engine.{GraftConf, SessionCache}
 import graft.engine.text.TextOps
 
 /** Parity auditor for the hot-bucket SHARD (TextOps.minhashPairs):
@@ -39,13 +39,13 @@ object ShardParity {
           .map(r => (r.getLong(0), r.getLong(1))).toSet
       }
 
-    spark.conf.set("graft.neardedup.bucketCap", cap.toString)
+    spark.conf.set(GraftConf.BucketCap, cap.toString)
     try {
       val base = surface(s"default-c$cap") // shardSize default 1M: unsharded
-      spark.conf.set("graft.neardedup.shardSize", forced.toString)
+      spark.conf.set(GraftConf.ShardSize, forced.toString)
       val sharded =
         try surface(s"forced-c$cap-s$forced")
-        finally spark.conf.unset("graft.neardedup.shardSize")
+        finally spark.conf.unset(GraftConf.ShardSize)
 
       val onlyBase = base -- sharded
       val onlySharded = sharded -- base
@@ -57,7 +57,7 @@ object ShardParity {
         (onlyBase.take(5) ++ onlySharded.take(5)).foreach(println)
         sys.exit(1)
       }
-    } finally spark.conf.unset("graft.neardedup.bucketCap")
+    } finally spark.conf.unset(GraftConf.BucketCap)
     spark.stop()
   }
 }

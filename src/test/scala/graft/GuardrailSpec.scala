@@ -1,26 +1,45 @@
 package graft
 
-import graft.engine.{ConfEnv, SessionCache, TempDirs}
+import graft.engine.{GraftConf, SessionCache, TempDirs}
 
-/** Pins for the round-14 ADVICE guardrails: the ConfEnv dual-face
-  * sync check, the markerless-orphan TTL sweep, and the per-file
-  * dataFingerprint (aggregate-collision fix).
+/** Pins for the round-14 ADVICE guardrails: the GraftConf dual-face
+  * sync check and its env parser, the markerless-orphan TTL sweep,
+  * and the per-file dataFingerprint (aggregate-collision fix).
   */
 class GuardrailSpec extends SparkSpec {
 
-  test("ConfEnv.requireSynced rejects a session-conf-only override of a mirrored knob") {
-    // the env face (SPARK_GRAFT_CONF, unset under sbt test) serves the
-    // default; a conf-only value differing from it is exactly the
+  test("GraftConf.requireOracleSynced rejects a session-only knob and fold width 12") {
+    // the oracle face (SPARK_GRAFT_CONF, unset under sbt test) serves
+    // the default; a conf-only value differing from it is exactly the
     // silent engine/oracle desync the guard exists to catch
-    val envFace = ConfEnv.get("graft.vector.dim", "64")
-    withConf("graft.vector.dim", (envFace.toInt + 1).toString) {
-      val e = intercept[IllegalArgumentException](ConfEnv.requireSynced(spark))
+    val envFace = GraftConf.oracle.vectorDim
+    withConf("graft.vector.dim", (envFace + 1).toString) {
+      val e = intercept[IllegalArgumentException](GraftConf.requireOracleSynced(spark))
       assert(e.getMessage.contains("SPARK_GRAFT_CONF"),
         s"guard must name the env var: ${e.getMessage}")
     }
-    // conf agreeing with the env face passes; absent key passes
-    withConf("graft.vector.dim", envFace)(ConfEnv.requireSynced(spark))
-    ConfEnv.requireSynced(spark)
+    // conf agreeing with the oracle face passes; absent key passes
+    withConf("graft.vector.dim", envFace.toString)(GraftConf.requireOracleSynced(spark))
+    GraftConf.requireOracleSynced(spark)
+    // the oracle SQL hardcodes the 8-digit fold: any other width is
+    // rejected even though the engine supports it
+    withConf("graft.text.foldHexDigits", "12") {
+      val e = intercept[IllegalArgumentException](GraftConf.requireOracleSynced(spark))
+      assert(e.getMessage.contains("graft.text.foldHexDigits=8"), e.getMessage)
+    }
+  }
+
+  test("SPARK_GRAFT_CONF rejects a key GraftConf does not define") {
+    assert(GraftConf.parseOverrides("graft.neardedup.bucketCap=8, graft.neardedup.shardSize=8") ==
+      Map("graft.neardedup.bucketCap" -> "8", "graft.neardedup.shardSize" -> "8"))
+    // a typo, and the three knobs that became constants
+    for (bad <- Seq("graft.neardedup.bucketcap=8", "graft.fan.postShuffle=off",
+                    "graft.timeseries.maxGridHours=10", "graft.stream.statePartitions=8")) {
+      val e = intercept[IllegalArgumentException](GraftConf.parseOverrides(bad))
+      assert(e.getMessage.contains("unknown key"), e.getMessage)
+    }
+    // a defined key with an out-of-range value fails at parse, too
+    intercept[IllegalArgumentException](GraftConf.parseOverrides("graft.neardedup.bucketCap=0"))
   }
 
   test("markerless graft-prefixed dirs are reclaimed only past the TTL; live-owner dirs never") {

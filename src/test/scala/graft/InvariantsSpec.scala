@@ -177,9 +177,9 @@ class InvariantsSpec extends SparkSpec {
     assert(out.count() == 0)
   }
 
-  test("the committed oracle pair-window default is 4096 (ConfEnv-independent in this JVM)") {
-    // The BETWEEN 1 AND <cap> literals are interpolated from ConfEnv
-    // (SPARK_GRAFT_CONF) so the probe gate's hotbucket profile can
+  test("the committed oracle pair-window default is 4096 (env unset in sbt test)") {
+    // The BETWEEN 1 AND <cap> literals are interpolated from
+    // GraftConf.oracle (SPARK_GRAFT_CONF) so the probe gate's hotbucket profile can
     // shrink engine cap and oracle window together. The DRIVER never
     // sets the env, so the shipped oracle bytes must carry the
     // committed 4096 — this pin fails if a session ever leaks an env
@@ -187,13 +187,12 @@ class InvariantsSpec extends SparkSpec {
     // engine's `graft.neardedup.bucketCap` default.
     assert(!sys.env.contains("SPARK_GRAFT_CONF"),
       "sbt test must not run under SPARK_GRAFT_CONF — the oracle pins below would test the wrong bytes")
-    assert(graft.engine.ConfEnv.overrides.isEmpty)
-    assert(graft.engine.text.TextOps.oracleBucketCap == "4096")
+    assert(graft.engine.GraftConf.oracle.bucketCap == 4096)
     Seq("minhash_near_dedup", "minhash_recall_b1r8").foreach { k =>
       assert(SparkEntry.oracleSql(k).contains("BETWEEN 1 AND 4096"),
         s"$k oracle lost the committed 4096 pair window")
     }
-    assert(graft.engine.text.TextOps.bucketCap(spark) == 4096,
+    assert(graft.engine.GraftConf(spark).bucketCap == 4096,
       "engine default bucketCap drifted from the oracle window")
   }
 

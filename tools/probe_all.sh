@@ -82,7 +82,7 @@ profile_args() {
 # profile name -> SPARK_GRAFT_CONF for the Verify/audit JVMs. The
 # hotbucket profile shrinks the near-dedup cap and shard so the
 # oversize-bucket shard engages on the 500-doc boilerplate bucket;
-# ConfEnv applies the SAME values to the engine session and the
+# GraftConf applies the SAME values to the engine session and the
 # oracle-SQL pair windows, so parity stays exact.
 profile_conf() {
   case "$1" in
